@@ -4,8 +4,7 @@ package graft
   * (rows>0 on sf0.001) and print a sample + the physical plan. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.local("graft-smoke")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-smoke")
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"[smoke] entry rows=$n")

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
+import scala.collection.immutable.ListMap
 import scala.collection.mutable.ArrayBuffer
 
-/** Streaming throughput/state artifact (VERDICT r14 item 4).
+/** Streaming throughput/state artifact.
   *
   * The streaming surface is correctness-spec'd (DocStreamSpec /
   * EventStreamSpec drive every operator through MemoryStream), but a
@@ -26,9 +27,11 @@ import scala.collection.mutable.ArrayBuffer
   * row count per batch from StreamingQueryProgress. The artifact's
   * point is the SHAPE of the state curve: funnel state rows must
   * plateau at O(distinct users) while input rows keep growing —
-  * measured here, asserted in StreamStateBoundSpec. Output: one JSON
-  * line on stdout (same contract as graft.Bench) + a pretty copy at
-  * tools/stream_bench_last.json.
+  * measured here, asserted in StreamStateBoundSpec.
+  *
+  * Usage: runMain graft.StreamBench [sfDir] (default SPARK_GRAFT_SF_DIR,
+  * then the sf0.1 test lake). Output: one JSON line on stdout, also
+  * written to tools/stream_bench_last.json.
   */
 object StreamBench {
 
@@ -57,23 +60,20 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val spark = Sessions.local("graft-streambench")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-streambench")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
 
     val work = java.nio.file.Files.createTempDirectory("graft_streambench").toString
-    val results = scala.collection.mutable.LinkedHashMap[String, Any]()
 
-    // ---- feed staging: documents on a MONOTONE synthetic event
-    // clock (1 doc/second by doc_id), 16 files => 8 two-file batches.
-    // r15 staged `doc_id % 3600` (a one-hour wrap): past the first
-    // 3600 docs every arrival regressed event time and fell behind
-    // the 10-minute watermark, so a 10× feed would mostly measure the
-    // late-data drop path, not ingest. The monotone clock keeps every
-    // doc on time at any SF, which makes the bounded-state claim
-    // clean: input grows ∝SF, watermark occupancy doesn't. ----
+    // Feed staging: documents on a MONOTONE synthetic event clock
+    // (1 doc/second by doc_id), 16 files => 8 two-file batches. A
+    // wrapping clock would regress event time past the 10-minute
+    // watermark, so a large feed would mostly measure the late-data
+    // drop path, not ingest. The monotone clock keeps every doc on time
+    // at any SF, which makes the bounded-state claim clean: input grows
+    // ∝SF, watermark occupancy doesn't.
     val docsB = spark.read.parquet(s"$sfDir/documents.parquet")
       .withColumn("ingest_ts",
         (lit(1704067200L) + col("doc_id")).cast("timestamp"))
@@ -102,10 +102,10 @@ object StreamBench {
     spark.streams.removeListener(tap1)
     val curatedRows = spark.read.parquet(s"$work/master/latest/docs").count()
 
-    // Bounded-state witness for the curation path (VERDICT r15 item
-    // 6): the in-stream stateful operator is the watermarked exact
-    // dedup, so its state is fingerprints WITHIN the 10-minute
-    // watermark of a 1-hour event-time spread — never the corpus. The
+    // Bounded-state witness for the curation path: the in-stream
+    // stateful operator is the watermarked exact dedup, so its state is
+    // fingerprints WITHIN the 10-minute watermark of a 1-hour
+    // event-time spread — never the corpus. The
     // artifact records the structural form of that claim: the state
     // peak must stay well under the total distinct fingerprints (if
     // eviction broke, state would converge on every fp ever seen).
@@ -114,7 +114,7 @@ object StreamBench {
     val nFps = docsB.select(md5(col("text"))).distinct().count()
     val curBatches = tap1.batches.sortBy(_.batchId)
     val maxState1 = curBatches.map(_.stateRows).foldLeft(0L)(math.max)
-    results += "curated_ingest" -> Map(
+    val curated = ListMap(
       "input_rows" -> nDocs, "curated_rows" -> curatedRows,
       "wall_sec" -> sec1, "rows_per_sec" -> nDocs / sec1,
       "n_batches" -> curBatches.size,
@@ -155,7 +155,7 @@ object StreamBench {
     spark.streams.removeListener(tap2)
 
     val funnelBatches = tap2.batches.sortBy(_.batchId)
-    results += "funnel_changelog" -> Map(
+    val funnel = ListMap(
       "input_rows" -> nEv, "distinct_users" -> nUsers,
       "wall_sec" -> sec2, "rows_per_sec" -> nEv / sec2,
       "n_batches" -> funnelBatches.size,
@@ -165,16 +165,8 @@ object StreamBench {
       "state_bounded_by_users" ->
         funnelBatches.lastOption.forall(_.stateRows <= nUsers))
 
-    def js(v: Any): String = v match {
-      case m: scala.collection.Map[_, _] =>
-        m.map { case (k, x) => s""""$k": ${js(x)}""" }.mkString("{", ", ", "}")
-      case l: Seq[_] => l.map(js).mkString("[", ", ", "]")
-      case d: Double => f"$d%.3f"
-      case s: String => s""""$s""""
-      case other => other.toString
-    }
-    val line = js(Map("metric" -> "stream_bench", "sf_dir" -> sfDir,
-      "unit" -> "sec") ++ results)
+    val line = Json.write(ListMap("metric" -> "stream_bench", "sf_dir" -> sfDir,
+      "unit" -> "sec", "curated_ingest" -> curated, "funnel_changelog" -> funnel))
     println(line)
     java.nio.file.Files.write(
       java.nio.file.Paths.get("tools/stream_bench_last.json"),

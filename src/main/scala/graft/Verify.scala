@@ -1,17 +1,99 @@
 package graft
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+
+import java.nio.file.{Files, Path, Paths}
+import scala.collection.immutable.{ListMap, TreeMap}
+import scala.jdk.CollectionConverters._
+
+/** Correctness dump: each query's result → parquet under
+  * `<outDir>/<name>`, plus oracle_sql.json, for the DuckDB oracle
+  * compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [q1 q2 ...] — the
+  * optional names dump only those queries (local iteration).
   *
   * Every dump is stamped with `verify_meta.json` — the working-tree git
   * SHA/dirty flag plus a content hash of the compiled classes — so a
   * stale build can never produce an artifact that silently claims to be
-  * HEAD (the r5/r6 contested-correctness failure mode: review commits
-  * landed after the driver's jar was built, and the artifact's 9 "hash
-  * fails" were the OLD code's output). `tools/selfcheck.py` refuses the
-  * compare when the stamp does not match the tree it runs against. */
+  * HEAD. `tools/selfcheck.py` refuses the compare when the stamp does
+  * not match the tree it runs against. */
 object Verify {
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, outDir) = (args(0), args(1))
+    val only = args.drop(2).toSet
+    val queries = Harness.selectOrExit("verify", "args", Harness.registered, only)
+    val h = Harness("verify", sfDir)
+    dump(h, outDir, queries, only, SparkEntry.oracleSql)
+    h.stop()
+  }
+
+  /** Writes the dump of `queries` (selected by `only`) into `outDir`. */
+  def dump(h: Harness, outDir: String, queries: Seq[(String, Harness.QueryFn)],
+           only: Set[String], oracleSql: Map[String, String]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    // A query that throws leaves a loud record in errors.json, which
+    // selfcheck.py grades as ERR, not just a stderr line: a missing dump
+    // alone reads as "not sampled".
+    val errors = ListMap.from(queries.flatMap { case (name, fn) =>
+      h.run(name, fn)(_.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        .result.left.toOption.map { e =>
+          // a stale dump from an earlier run must not mask this failure
+          try deleteTree(Paths.get(outDir, name)) catch { case _: Throwable => () }
+          name -> s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
+        }
+    })
+    // Manifest = every query whose dump EXISTS in outDir, always with
+    // the current code's oracle SQL. A filtered run into a previously
+    // full dir keeps the other queries' coverage instead of collapsing
+    // the compare to the subset, and a stale old dump can only fail
+    // loudly, never validate against an equally old oracle.
+    write(outDir, "oracle_sql.json", TreeMap.from(oracleSql.filter { case (k, _) =>
+      only.isEmpty || only(k) || Files.exists(Paths.get(outDir, k)) }))
+    // written even when empty, so "no errors" differs from "never recorded"
+    write(outDir, "errors.json", errors)
+    if (errors.nonEmpty)
+      System.err.println(s"[verify] ${errors.size} FAILED: ${errors.keys.mkString(", ")}")
+    // stale_build: a source file newer than every compiled class means
+    // this JVM is NOT running the working tree. `filtered` records a
+    // subset refresh: it must not re-stamp the other queries' dumps,
+    // possibly from an older build, as current, so selfcheck refuses
+    // to full-compare a subset-stamped dump. duckdb_version names the
+    // oracle build the local replica compares with, so a divergence in
+    // a remote compare is diagnosed from the artifact.
+    val classesRoot = Paths.get("target/scala-2.13/classes")
+    write(outDir, "verify_meta.json", ListMap(
+      "git_sha" -> execOut("git", "rev-parse", "HEAD"),
+      "git_dirty" -> execOut("git", "status", "--porcelain").nonEmpty,
+      "classes_sha256" -> classesFingerprint(classesRoot),
+      "stale_build" -> (newestUnder(Paths.get("src/main/scala")) > newestUnder(classesRoot)),
+      "filtered" -> only.toSeq.sorted,
+      "spark_version" -> h.spark.version,
+      "duckdb_version" -> execOut("python3", "-c", "import duckdb; print(duckdb.__version__)")))
+    // Forensic serialization dump: per dumped query, the exact
+    // normalized byte stream the gate hashes for the Spark side
+    // (tools/dump_rows.py shares selfcheck.py's norm rules and DuckDB
+    // fetch path), so a failed compare becomes a byte diff against
+    // <name>.rows.txt. Best-effort: without python3+duckdb it is
+    // skipped, never failing the run. GRAFT_SKIP_ROWS_DUMP=1 turns it
+    // off for big-SF runs, where it is slow and selfcheck.py recomputes
+    // the hashes independently anyway.
+    val dumped = queries.map(_._1).filterNot(errors.contains)
+    if (sys.env.get("GRAFT_SKIP_ROWS_DUMP").exists(_.nonEmpty)) {
+      // Skipping must also evict: rows.txt files from an older build in
+      // a reused outDir would make selfcheck's serializer-parity check
+      // report phantom drift for any query whose output changed.
+      Option(new java.io.File(outDir).listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith(".rows.txt")).foreach(f => Files.deleteIfExists(f.toPath))
+      System.err.println("[verify] rows dump skipped (GRAFT_SKIP_ROWS_DUMP set; " +
+        "stale *.rows.txt evicted)")
+    } else if (dumped.nonEmpty) {
+      val res = execOut(("python3" +: "tools/dump_rows.py" +: outDir +: dumped): _*)
+      if (res.startsWith("<")) System.err.println(s"[verify] rows dump skipped: $res")
+    }
+  }
+
+  private def write(outDir: String, file: String, v: Any): Unit =
+    Files.writeString(Paths.get(outDir, file), Json.write(v))
 
   private def execOut(cmd: String*): String =
     try {
@@ -20,173 +102,36 @@ object Verify {
       if (p.waitFor() == 0) out else s"<exit ${p.exitValue()}>"
     } catch { case e: Exception => s"<error: ${e.getMessage}>" }
 
-  /** sha256 over (sorted relative path, size, bytes) of every .class
-    * under the compiled-classes root — the build fingerprint. Content
-    * (not mtime) based: an identical rebuild keeps the same
-    * fingerprint, because its dumps would be identical too. */
-  private def classesFingerprint(root: java.nio.file.Path): String = {
-    if (!Files.isDirectory(root)) return "<no-classes-dir>"
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val stream = Files.walk(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      stream.iterator().asScala
-        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".class"))
-        .toSeq.sortBy(root.relativize(_).toString)
+  private def regularFiles(root: Path): List[Path] =
+    if (!Files.isDirectory(root)) Nil
+    else {
+      val st = Files.walk(root)
+      try st.iterator().asScala.filter(Files.isRegularFile(_)).toList finally st.close()
+    }
+
+  private def newestUnder(root: Path): Long =
+    regularFiles(root).map(Files.getLastModifiedTime(_).toMillis).foldLeft(0L)(math.max)
+
+  /** sha256 over (sorted relative path, bytes) of every .class under
+    * the compiled-classes root — the build fingerprint. Content (not
+    * mtime) based: an identical rebuild keeps the same fingerprint,
+    * because its dumps would be identical too. */
+  private def classesFingerprint(root: Path): String =
+    if (!Files.isDirectory(root)) "<no-classes-dir>"
+    else {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      regularFiles(root).filter(_.toString.endsWith(".class"))
+        .sortBy(root.relativize(_).toString)
         .foreach { p =>
           md.update(root.relativize(p).toString.getBytes("UTF-8"))
           md.update(Files.readAllBytes(p))
         }
-    } finally stream.close()
-    md.digest().map("%02x".format(_)).mkString
-  }
+      md.digest().map("%02x".format(_)).mkString
+    }
 
-  def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
-    Sessions.guardHeapForLake(sfDir)
-    // Optional extra args: run only the named queries (local iteration).
-    val only = args.drop(2).toSet
-    var spark = Sessions.local("graft-verify")
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // A query that throws must leave a LOUD artifact, not just a
-    // stderr line: round 8 closed with 61 analysis-broken queries
-    // reading as "not sampled" because a failed query produced no
-    // dump at all (VERDICT r8 item 2). Failures are collected and
-    // written to errors.json; selfcheck.py grades those rows as ERR.
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      // One query's executor-level abort (task OOM at a big SF) stops
-      // the shared local SparkContext; without recovery every LATER
-      // query would be a false "stopped SparkContext" failure — the
-      // r15 sf10 sweep lost 46 dumps to one such abort. Recreate the
-      // session so each query is judged on its own behavior.
-      if (spark.sparkContext.isStopped) {
-        System.err.println(s"[verify] SparkContext stopped — recreating session before $name")
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        spark = Sessions.local("graft-verify")
-        spark.sparkContext.setLogLevel("WARN")
-      }
-      try graft.queries.QDef.withCacheRelease(spark, fn(spark, sfDir)) {
-        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
-        // a stale dump from an earlier run must not mask this failure
-        def rm(p: java.nio.file.Path): Unit = {
-          if (Files.isDirectory(p)) {
-            val st = Files.list(p)
-            try { import scala.jdk.CollectionConverters._
-              st.iterator().asScala.foreach(rm) } finally st.close()
-          }
-          Files.deleteIfExists(p)
-        }
-        try rm(Paths.get(outDir, name))
-        catch { case _: Throwable => () }
-      }
+  private def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val st = Files.walk(root)
+      try st.iterator().asScala.toList.reverse.foreach(Files.delete) finally st.close()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // Manifest = every query whose dump EXISTS in outDir (always with
-    // current-code oracle SQL). A filtered run into a fresh dir lists
-    // only what it dumped; into a previously-full dir it keeps the
-    // other queries' coverage instead of silently collapsing the
-    // compare to the filtered subset — and because the SQL is always
-    // regenerated, a stale old dump can only fail loudly, never
-    // validate against an equally-old oracle.
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) =>
-        only.isEmpty || only(k) ||
-          java.nio.file.Files.exists(java.nio.file.Paths.get(outDir, k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // errors.json always written (empty {} on a clean run) so "no
-    // errors file" is distinguishable from "errors never recorded".
-    Files.writeString(Paths.get(s"$outDir/errors.json"),
-      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
-    if (errors.nonEmpty)
-      System.err.println(s"[verify] ${errors.size} FAILED: ${errors.keys.mkString(", ")}")
-    // Build/tree provenance stamp — see object scaladoc. stale_build
-    // is the direct symptom check: a source file newer than every
-    // compiled class means this JVM is NOT running the working tree.
-    val classesRoot = Paths.get("target/scala-2.13/classes")
-    val newestUnder = (p: java.nio.file.Path) => {
-      if (!Files.isDirectory(p)) 0L
-      else {
-        val st = Files.walk(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala.filter(Files.isRegularFile(_))
-            .map(Files.getLastModifiedTime(_).toMillis).foldLeft(0L)(math.max)
-        } finally st.close()
-      }
-    }
-    // `filtered` records whether this run refreshed only a subset: a
-    // filtered run into a warm dir must NOT re-stamp the other
-    // queries' dumps (possibly from an older build) as current —
-    // selfcheck refuses to full-compare a subset-stamped dump.
-    val meta = Map(
-      "git_sha" -> q(execOut("git", "rev-parse", "HEAD")),
-      "git_dirty" -> execOut("git", "status", "--porcelain").nonEmpty.toString,
-      "classes_sha256" -> q(classesFingerprint(classesRoot)),
-      "stale_build" ->
-        (newestUnder(Paths.get("src/main/scala")) > newestUnder(classesRoot)).toString,
-      "filtered" -> only.toSeq.sorted.map(q).mkString("[", ",", "]"),
-      "spark_version" -> q(spark.version),
-      // Oracle-environment stamp (best-effort): the DuckDB the local
-      // replica would compare with. When a driver-side compare
-      // diverges from the replica, the artifact itself now says which
-      // oracle build the dump was verified against — diagnosed from
-      // the artifact instead of re-litigated per round (the r5–r7
-      // float-query adjudication).
-      "duckdb_version" ->
-        q(execOut("python3", "-c", "import duckdb; print(duckdb.__version__)"))
-    ).map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/verify_meta.json"), meta)
-    // Forensic serialization dump (VERDICT r9 item 3): write, per dumped
-    // query, the exact normalized byte stream the gate hashes for the
-    // Spark side (tools/dump_rows.py shares selfcheck.py's norm rules and
-    // — crucially — the same DuckDB read_parquet fetch path the compare
-    // uses). A driver-red becomes a byte-diff against <name>.rows.txt
-    // instead of a per-round re-guess. Best-effort: if the host lacks
-    // python3+duckdb the dump is skipped, never fails the run.
-    // GRAFT_SKIP_ROWS_DUMP=1 gates the tail off entirely for big-SF
-    // runs (r15: the single-threaded pass ran 40+ min at sf10 and was
-    // killed by hand — the forensic artifact is a small-SF debugging
-    // aid, not part of the gate itself, whose hashes selfcheck.py
-    // recomputes independently). When it does run, dump_rows.py now
-    // fans out across processes (see its scaladoc).
-    val dumped = SparkEntry.queries.keys
-      .filter(n => (only.isEmpty || only(n)) && !errors.contains(n)).toSeq.sorted
-    if (sys.env.get("GRAFT_SKIP_ROWS_DUMP").exists(_.nonEmpty)) {
-      // Skipping must also EVICT: a reused outDir can hold rows.txt
-      // files stamped from an older build's parquet, and selfcheck's
-      // serializer-parity check would diff those stale bytes against
-      // the fresh Spark hash and report phantom "dump_rows drift" for
-      // any query whose output legitimately changed (r16 ADVICE).
-      val stale = new java.io.File(outDir).listFiles()
-      if (stale != null) stale.filter(_.getName.endsWith(".rows.txt"))
-        .foreach(f => Files.deleteIfExists(f.toPath))
-      System.err.println("[verify] rows dump skipped (GRAFT_SKIP_ROWS_DUMP set; " +
-        "stale *.rows.txt evicted)")
-    } else if (dumped.nonEmpty) {
-      val res = execOut(("python3" +: "tools/dump_rows.py" +: outDir +: dumped): _*)
-      if (res.startsWith("<")) System.err.println(s"[verify] rows dump skipped: $res")
-    }
-    spark.stop()
-  }
 }

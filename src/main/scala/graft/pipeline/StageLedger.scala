@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths => JPaths}
+import scala.collection.immutable.ListMap
+import graft.Json
 
 /** Per-endpoint resume checkpoints for the E1 lifecycle — the
   * reference's own unbuilt wishlist item (CONTRIBUTING.md:8 "resume
@@ -30,8 +31,6 @@ import java.nio.file.{Files, Paths => JPaths}
   */
 object StageLedger {
 
-  private val mapper = new ObjectMapper()
-
   def path(outRoot: String): String = s"$outRoot/run_ledger.json"
 
   /** Completed stages of `runId`, empty for a fresh/foreign ledger.
@@ -44,7 +43,7 @@ object StageLedger {
     if (!Files.exists(p)) Map.empty
     else {
       val s = Files.readString(p)
-      val node = try mapper.readTree(s) catch {
+      val node = try Json.read(s) catch {
         case e: Exception => throw new IllegalStateException(
           s"run ledger at $p exists but is unparseable: $s", e)
       }
@@ -70,14 +69,9 @@ object StageLedger {
     val done = load(outRoot, runId) + (stage -> counts)
     val p = JPaths.get(path(outRoot))
     if (p.getParent != null) Files.createDirectories(p.getParent)
-    val root = mapper.createObjectNode()
-    root.put("run_id", runId)
-    val comp = root.putObject("completed")
-    done.foreach { case (name, (a, b)) =>
-      val arr = comp.putArray(name); arr.add(a); arr.add(b)
-    }
     val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(root))
+    Files.writeString(tmp, Json.write(ListMap("run_id" -> runId,
+      "completed" -> done.map { case (name, (a, b)) => name -> Seq(a, b) })))
     Files.move(tmp, p,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)

@@ -2,8 +2,9 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths => JPaths}
+import scala.collection.immutable.ListMap
+import graft.Json
 
 /** Keyset-watermark state (E1 steps 2/9: run_ac_extraction.py
   * :1556-1571, 1696-1700) — `state.json` holding the max processed id
@@ -18,11 +19,6 @@ object Watermark {
 
   final case class State(maxId: Long, lastRunUtc: String)
 
-  // Jackson ships with Spark — a real JSON parse survives field
-  // reordering, escapes and added fields, where the previous regex
-  // scrape only happened to.
-  private val mapper = new ObjectMapper()
-
   /** Absent file = fresh start (maxId -1). A present-but-unparseable
     * file is an ERROR, not a fresh start — silently treating garbage
     * as maxId=-1 would re-extract the full history, and a truncated
@@ -32,7 +28,8 @@ object Watermark {
     if (!Files.exists(p)) State(-1L, "")
     else {
       val s = Files.readString(p)
-      val node = try mapper.readTree(s) catch {
+      // a real JSON parse survives field reordering, escapes and added fields
+      val node = try Json.read(s) catch {
         case e: Exception => throw new IllegalStateException(
           s"watermark state at $path exists but is unparseable: $s", e)
       }
@@ -52,10 +49,8 @@ object Watermark {
     val p = JPaths.get(path)
     if (p.getParent != null) Files.createDirectories(p.getParent)
     val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    val root = mapper.createObjectNode()
-    root.put("max_id", state.maxId)
-    root.put("last_run_utc", state.lastRunUtc)
-    Files.writeString(tmp, mapper.writeValueAsString(root))
+    Files.writeString(tmp,
+      Json.write(ListMap("max_id" -> state.maxId, "last_run_utc" -> state.lastRunUtc)))
     Files.move(tmp, p,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)

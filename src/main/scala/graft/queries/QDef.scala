@@ -22,10 +22,11 @@ object QDef {
     * finishes — and Spark substitutes cached plans into any later
     * query with a matching subtree (the cross-query
     * cache-substitution hazard Curation's scaladoc documents). Every
-    * harness main (Bench, Verify, ExplainOne) routes its per-query
-    * action through here so release is centralized, not a per-caller
-    * workaround; library consumers executing `SparkEntry.queries`
-    * directly should do the same after each action. */
+    * harness main (Bench, Verify, Explain, through [[graft.Harness]])
+    * routes its per-query action through here so release is
+    * centralized, not a per-caller workaround; library consumers
+    * executing `SparkEntry.queries` directly should do the same after
+    * each action. */
   def withCacheRelease[T](spark: SparkSession, df: => DataFrame)(action: DataFrame => T): T =
     try action(df) finally {
       spark.catalog.clearCache()
@@ -40,17 +41,19 @@ object QDef {
         .foreach(_.unpersist(blocking = false))
     }
 
-  /** Lazy local-checkpoint SNAPSHOT of a deterministic intermediate:
-    * materializes on first use and — unlike persist() — TRUNCATES the
-    * plan lineage to the stored blocks. For unrolled iterative
-    * operators (q_pagerank_iter, q_kcore_peel, q_hits_scores) the
-    * truncation is the point: without it every iteration re-embeds
-    * the full upstream subtree, the executed plan grows to hundreds
-    * of scans (q_kcore_peel's r18 before-plan: 142 parquet scans,
-    * 5k formatted lines), and AQE replans the whole tree per stage —
-    * fixed overhead that dwarfs the data work at every SF (guide
-    * §1.2 step 1, §3.3 "materialising an intermediate truncates the
-    * plan"; the NearDup CC loop's r17 discipline applied to the
+  /** Local-checkpoint SNAPSHOT of a deterministic intermediate: unlike
+    * persist() it TRUNCATES the plan lineage to the stored blocks. It is
+    * not lazy under AQE: building the snapshot runs its upstream
+    * shuffle stages as jobs before the query's action, so that work
+    * counts in the build time and is absent from the final plan's
+    * scans. For unrolled iterative operators (q_pagerank_iter,
+    * q_kcore_peel, q_hits_scores) the truncation is the point: without
+    * it every iteration re-embeds the full upstream subtree, the
+    * executed plan grows to hundreds of scans (q_kcore_peel: 142
+    * parquet scans, 5k formatted lines), and AQE replans the whole tree
+    * per stage — fixed overhead that dwarfs the data work at every SF
+    * (guide §1.2 step 1, §3.3 "materialising an intermediate truncates
+    * the plan"; the NearDup CC loop's discipline applied to the
     * unrolled-plan family). In-query materialization recomputed per
     * run — NOT cross-run caching; blocks are freed centrally by
     * [[withCacheRelease]] after each query's action. */
