@@ -14,9 +14,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
-  /** Fail fast when the harness heap can't carry the lake (ADVICE
-    * r14): the forked JVM defaults to `-Xmx8g` (build.sbt), which at
-    * a ≥1 GiB lake on local[24+] is ~0.3 GB per task slot — enough
+  /** Fail fast when the harness heap can't carry the lake: the
+    * forked JVM defaults to `-Xmx8g` (build.sbt), which at a ≥1 GiB
+    * lake on local[24+] is ~0.3 GB per task slot — enough
     * for q_approx_distinct's Expand×3 aggregate to legitimately OOM
     * an executor thread 40 minutes into a sweep. A real cluster
     * sizes executor memory per core; locally the fix is the env var,

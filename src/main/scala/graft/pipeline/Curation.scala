@@ -53,7 +53,7 @@ object Curation {
              edgePairs: DataFrame => DataFrame): Stages = {
     val cols = docs.columns.map(col)
 
-    // r18 OPT: snapshotted (lazy localCheckpoint — the 100 TB run
+    // snapshotted (lazy localCheckpoint — the 100 TB run
     // writes this stage boundary to storage, scaladoc above). The
     // verdict projection used to run THREE times per lifecycle: the
     // exact-dedup aggregate's build side, the survivor join's probe
@@ -65,7 +65,7 @@ object Curation {
 
     val keepIds = NearDup.exactDedup(quality, "doc_id", "text")
       .select(col("keep_id").as("doc_id"))
-    // persisted (r17 OPT): this boundary used to be re-derived three
+    // persisted: this boundary used to be re-derived three
     // times — once for the audit's c-count and TWICE inside the reps
     // plan (the edge generator and the survivor join both consume it,
     // and each derivation pays the quality verdict twice: probe side

@@ -33,11 +33,6 @@ object PersistTableDual {
     val latest = s"$root/master/latest/$table"
   }
 
-  /** Read master/raw with hive partition columns forced back to their
-    * authoritative (delta-schema) types: partition-value inference
-    * would re-type string "07" as int 7 — the leading zero is already
-    * gone after inference, so only an explicit read schema preserves
-    * it. Case-insensitive name matching mirrors Spark's resolution. */
   /** The on-disk layout schema with hive partition columns forced
     * back to their authoritative (delta-schema) types. */
   private def typedLayout(spark: SparkSession, paths: Paths,
@@ -56,6 +51,11 @@ object PersistTableDual {
     })
   }
 
+  /** Read master/raw with hive partition columns forced back to their
+    * authoritative (delta-schema) types: partition-value inference
+    * would re-type string "07" as int 7 — the leading zero is already
+    * gone after inference, so only an explicit read schema preserves
+    * it. Case-insensitive name matching mirrors Spark's resolution. */
   private def readRawTyped(spark: SparkSession,
                            paths: Paths,
                            authoritative: org.apache.spark.sql.types.StructType,

@@ -62,6 +62,43 @@ object RunPipeline {
     (sliceCount, rawN, latestN)
   }
 
+  /** Name prefix of [[StagePool]]'s threads. */
+  private[pipeline] val StageThreadPrefix = "runFull-stage-"
+
+  /** A fixed pool of `threads` daemon threads for `runFull`'s
+    * concurrent stages. Once a task fails no queued task starts, but
+    * running tasks are never interrupted. [[join]] waits until every
+    * pool thread has exited, then rethrows the first failure as it
+    * was thrown (not wrapped in an `ExecutionException`). */
+  private final class StagePool(threads: Int) {
+    import java.util.concurrent._
+    private val failure = new atomic.AtomicReference[Throwable]()
+    private val workers = new ConcurrentLinkedQueue[Thread]()
+    private val pool = Executors.newFixedThreadPool(threads, (r: Runnable) => {
+      val t = new Thread(r, StageThreadPrefix + (workers.size + 1))
+      t.setDaemon(true)
+      workers.add(t)
+      t
+    })
+
+    def submit[T](task: => T): Future[T] = pool.submit(new Callable[T] {
+      def call(): T =
+        if (failure.get != null) throw new CancellationException("an earlier stage failed")
+        else try task catch { case e: Throwable => failure.compareAndSet(null, e); throw e }
+    })
+
+    def join(): Unit = {
+      pool.shutdown()
+      // an interrupt of the waiting thread counts as the failure: no
+      // queued task starts, and the running ones are still awaited
+      workers.forEach { t =>
+        while (t.isAlive)
+          try t.join() catch { case e: InterruptedException => failure.compareAndSet(null, e) }
+      }
+      Option(failure.get).foreach(e => throw e)
+    }
+  }
+
   /** What one full-lifecycle run did — counts per stage, for tests
     * and operational logs. */
   final case class FullRunReport(
@@ -79,22 +116,52 @@ object RunPipeline {
     *      optional debug sample (U3/O2)            (:1576-1585)
     *   5. dims via the TTL cache                   (:1593)
     *   6. persist_table_dual per extracted table —
-    *      16 stages mirroring the reference's
-    *      per-endpoint extract→persist breadth
-    *      (:1605-1664): contacts; the combined
-    *      activities stage + FIVE per-endpoint
-    *      activity splits; orders (+ the
-    *      dim-enriched variant, E2); the two-level
-    *      deal-bundle fan-out (parent deals →
-    *      child notes/tasks/activities, parent-FK
-    *      stamped, :836-861); the per-contact
-    *      sorted TAG SET and latest SCORE rollups
+    *      the REST catalog stages first (when
+    *      `acApiBase` is set), one at a time in
+    *      declaration order, so the load on the
+    *      external API is that of a sequential
+    *      run; then 16 star-schema stages
+    *      mirroring the reference's per-endpoint
+    *      extract→persist breadth (:1605-1664):
+    *      contacts; the combined activities stage
+    *      + FIVE per-endpoint activity splits;
+    *      orders (+ the dim-enriched variant, E2);
+    *      the two-level deal-bundle fan-out
+    *      (parent deals → child notes/tasks/
+    *      activities, parent-FK stamped,
+    *      :836-861); the per-contact sorted TAG
+    *      SET and latest SCORE rollups
     *      (:1455-1474); and the dim_* stages the
     *      reference persists each run
     *   7. chatter mart + per-contact digest CSV/
-    *      TXT sink (E3/S9)                         (:1666-1692)
+    *      TXT sink (E3/S9), run CONCURRENTLY with
+    *      the 16 star-schema stages           (:1666-1692)
     *   8. watermark advance — from the durably
-    *      WRITTEN contacts delta                   (:1696-1700)
+    *      WRITTEN contacts delta, once every
+    *      stage and the mart are done          (:1696-1700)
+    *
+    * Concurrency (steps 6–7): the reference persists one endpoint at
+    * a time because pandas is single-threaded; here the star-schema
+    * stages and the mart go to ONE fixed pool of
+    * `spark.sparkContext.defaultParallelism` daemon threads, mart
+    * first (it is the longest path). Their order was never a
+    * correctness input: each stage writes only its own table through
+    * an idempotent, content-hash-deduped sink — Structured
+    * Streaming's exactly-once recipe (replayable source + idempotent
+    * sink). On the first failure no queued stage starts; running
+    * stages finish and are never interrupted (a full-rewrite persist
+    * cut between its raw delete and its rename would lose
+    * master/raw); then `runFull` rethrows the original throwable. The
+    * watermark does not advance and the resume ledger keeps every
+    * stage that completed.
+    *
+    * `stageHook(table)` fires after each stage that persisted in this
+    * call (a resumed stage does not fire it), right after its ledger
+    * entry is written. Calls are serialized under one lock — a hook
+    * is never entered concurrently — and come in completion order,
+    * which for the star-schema stages varies from run to run. A hook
+    * that throws fails the run like a failing stage (the stage stays
+    * ledgered). RunPipelineSpec uses it to kill a run mid-catalog.
     *
     * Fact stages read the testdata star schema (the reference's 18
     * REST extracts ≙ events/orders fan-out, FIXTURES.md); the
@@ -121,8 +188,6 @@ object RunPipeline {
     // SAME runId skips every already-persisted stage — its lazy delta
     // is never even planned, so no source scan / REST fetch happens
     val resumed = StageLedger.load(outRoot, runId)
-    // `stageHook` fires after each completed stage — the fault-
-    // injection seam RunPipelineSpec uses to kill a run mid-catalog
 
     // ── contacts collection (DSv2 paged source) ──
     val contacts = spark.read.format("graft.sources.PagedSource")
@@ -151,7 +216,6 @@ object RunPipeline {
       .dropDuplicates("id")
     val contactsDelta =
       sampleSize.fold(delta0)(n => delta0.orderBy("id").limit(n)).cache()
-    var mart: org.apache.spark.sql.DataFrame = null
     var dealChildren: org.apache.spark.sql.DataFrame = null
     var eventsSlice: org.apache.spark.sql.DataFrame = null
     try {
@@ -169,7 +233,10 @@ object RunPipeline {
     // 6. persist stages (each one is the proven E2 merge). `delta` is
     // BY-NAME: a ledgered (resumed) stage returns its recorded counts
     // without constructing the plan at all — for fan-out endpoints
-    // that means zero REST fetches, for star stages zero scans.
+    // that means zero REST fetches, for star stages zero scans. The
+    // ledger entry and the hook share one lock: concurrent stages
+    // complete in any order, but the hook is never entered concurrently.
+    val completion = new Object
     def stage(table: String, delta: => org.apache.spark.sql.DataFrame,
               keys: Seq[String], updatedAt: String): (String, (Long, Long)) =
       resumed.get(table) match {
@@ -178,8 +245,10 @@ object RunPipeline {
           val counts = PersistTableDual.persist(spark,
             PersistTableDual.Paths(outRoot, table), delta, runId, nowUtc,
             keys, updatedAt)
-          StageLedger.markDone(outRoot, runId, table, counts)
-          stageHook(table)
+          completion.synchronized {
+            StageLedger.markDone(outRoot, runId, table, counts)
+            stageHook(table)
+          }
           table -> counts
       }
 
@@ -220,15 +289,6 @@ object RunPipeline {
     def childStage(table: String, flag: String) =
       stage(table, dealLines.filter(col("l_returnflag") === flag),
         Seq("deal_id", "l_linenumber"), "l_shipdate")
-
-    // per-endpoint activity splits (the reference extracts ONE table
-    // per REST endpoint — email opens/clicks/site visits/logs/goals,
-    // run_ac_extraction.py:1605-1664): same cached slice, one filter
-    // + persist per type
-    val activityTypes = Seq("click", "view", "signup", "purchase", "error")
-    val typedStages = activityTypes.map(tpe =>
-      stage(s"activity_$tpe", events.filter(col("event_type") === tpe),
-        Seq("event_id"), "ts"))
 
     // per-contact TAG SET (the reference's sorted tag/list/automation
     // sets, :1455-1474): one map-side-combined collect_set rollup
@@ -289,54 +349,77 @@ object RunPipeline {
         (dimStages ++ fanStages).toMap
     }
 
-    val persisted = acStages ++ (Map(
-      stage("contacts",
+    // per-endpoint activity splits (the reference extracts ONE table
+    // per REST endpoint — email opens/clicks/site visits/logs/goals,
+    // run_ac_extraction.py:1605-1664): same cached slice, one filter
+    // + persist per type
+    val typedStages = Seq("click", "view", "signup", "purchase", "error")
+      .map(tpe => () => stage(s"activity_$tpe",
+        events.filter(col("event_type") === tpe), Seq("event_id"), "ts"))
+    val starStages = typedStages ++ Seq(
+      () => stage("contacts",
         contactsDelta.withColumn("contact_id", col("id").cast("string")),
         Seq("contact_id"), "updated_at"),
-      stage("activities", events, Seq("event_id"), "ts"),
-      stage("orders", orders, Seq("o_orderkey"), "o_orderdate"),
-      stage("orders_enriched", ordersEnriched, Seq("o_orderkey"), "o_orderdate"),
-      childStage("deal_notes", "R"),
-      childStage("deal_tasks", "A"),
-      childStage("deal_activities", "N"),
-      stage("contact_tags", contactTags, Seq("contact_id"), "last_seen"),
-      stage("contact_scores", contactScores, Seq("contact_id"), "scored_at"),
-      dimStage("dim_nation", nation, "n_nationkey"),
-      dimStage("dim_region", region, "r_regionkey"))
-      ++ typedStages)
+      () => stage("activities", events, Seq("event_id"), "ts"),
+      () => stage("orders", orders, Seq("o_orderkey"), "o_orderdate"),
+      () => stage("orders_enriched", ordersEnriched, Seq("o_orderkey"), "o_orderdate"),
+      () => childStage("deal_notes", "R"),
+      () => childStage("deal_tasks", "A"),
+      () => childStage("deal_activities", "N"),
+      () => stage("contact_tags", contactTags, Seq("contact_id"), "last_seen"),
+      () => stage("contact_scores", contactScores, Seq("contact_id"), "scored_at"),
+      () => dimStage("dim_nation", nation, "n_nationkey"),
+      () => dimStage("dim_region", region, "r_regionkey"))
 
     // 7. mart + digest (E3): flagship chatter master bounded to this
     // run's universe, written as the readable master file, plus the
     // per-contact digest in CSV and one-TXT-per-contact form (S9).
-    // CACHED: the mart (the heaviest plan in the repo) feeds the CSV
-    // write, the digest aggregation, and the display lookup — three
-    // actions that would otherwise each recompute it from scratch.
-    mart = ChatterMaster.chatterMaster(spark, sfDir)
-      .join(universe, Seq("contact_id"), "left_semi").cache()
-    val martDir = s"$outRoot/master/mart"
-    mart.write.mode("overwrite").option("header", "true")
-      .csv(s"$martDir/chatter_master")
-    val martRows = mart.count()
+    // Returns (mart rows, digests read back).
+    def martAndDigest(): (Long, Long) = {
+      // CACHED: the mart (the heaviest plan in the repo) feeds the CSV
+      // write, the digest aggregation, and the display lookup — three
+      // actions that would otherwise each recompute it from scratch.
+      val mart = ChatterMaster.chatterMaster(spark, sfDir)
+        .join(universe, Seq("contact_id"), "left_semi").cache()
+      try {
+        val martDir = s"$outRoot/master/mart"
+        mart.write.mode("overwrite").option("header", "true")
+          .csv(s"$martDir/chatter_master")
+        val martRows = mart.count()
 
-    val digestCore = mart.select(col("contact_id"),
-      struct(col("event_ts").as("ets"), xxhash64(col("event_id")).as("event_id"),
-        col("event_type"), col("chatter_line").as("line")).as("ev"))
-      .as[(Long, graft.ops.DigestEvent)]
-      .groupByKey(_._1).mapValues(_._2)
-      .agg(new graft.ops.DigestAgg(5).toColumn)
-      .toDF("contact_id", "out")
-    val display = mart.select(col("contact_id"), col("contact_display")).distinct()
-    val digests = digestCore.join(broadcast(display), Seq("contact_id"))
-      .select(col("contact_id"),
-        concat(col("contact_display"), lit(" ["), col("out.types"),
-          lit("]\n"), col("out.tail")).as("digest"))
-    digests.write.mode("overwrite").option("header", "true")
-      .csv(s"$martDir/contact_digest")
-    ChatterMaster.writeDigestTxt(digests, s"$martDir/contact_digest_txt")
-    // multiLine: digest bodies embed newlines (CSV-quoted on write) —
-    // a plain line-splitting read would miscount records
-    val nDigests = spark.read.option("header", "true")
-      .option("multiLine", "true").csv(s"$martDir/contact_digest").count()
+        val digestCore = mart.select(col("contact_id"),
+          struct(col("event_ts").as("ets"), xxhash64(col("event_id")).as("event_id"),
+            col("event_type"), col("chatter_line").as("line")).as("ev"))
+          .as[(Long, graft.ops.DigestEvent)]
+          .groupByKey(_._1).mapValues(_._2)
+          .agg(new graft.ops.DigestAgg(5).toColumn)
+          .toDF("contact_id", "out")
+        val display = mart.select(col("contact_id"), col("contact_display")).distinct()
+        val digests = digestCore.join(broadcast(display), Seq("contact_id"))
+          .select(col("contact_id"),
+            concat(col("contact_display"), lit(" ["), col("out.types"),
+              lit("]\n"), col("out.tail")).as("digest"))
+        digests.write.mode("overwrite").option("header", "true")
+          .csv(s"$martDir/contact_digest")
+        ChatterMaster.writeDigestTxt(digests, s"$martDir/contact_digest_txt")
+        // multiLine: digest bodies embed newlines (CSV-quoted on write) —
+        // a plain line-splitting read would miscount records
+        val nDigests = spark.read.option("header", "true")
+          .option("multiLine", "true").csv(s"$martDir/contact_digest").count()
+        (martRows, nDigests)
+      } finally mart.unpersist() // a leaked cached mart would pin
+                                 // executor memory across retries
+    }
+
+    // steps 6–7 on one pool (scaladoc "Concurrency"); join() runs in
+    // the finally, so no stage is still running when the caches below
+    // are unpersisted
+    val pool = new StagePool(spark.sparkContext.defaultParallelism)
+    val (martRun, starRuns) =
+      try (pool.submit(martAndDigest()), starStages.map(s => pool.submit(s())))
+      finally pool.join()
+    val (martRows, nDigests) = martRun.get()
+    val persisted = acStages ++ starRuns.map(_.get())
 
     // 8. advance the watermark from the durably WRITTEN contacts
     // delta (never from a re-scan of the live source — upstream may
@@ -352,10 +435,8 @@ object RunPipeline {
     FullRunReport(runId, nSeeds, universeSize, persisted, martRows, nDigests,
       state.maxId, advanced.maxId)
     } finally {
-      // unpersist even on failure — a leaked cached mart (the
-      // heaviest plan here) would pin executor memory for the
-      // session's lifetime across retries
-      if (mart != null) mart.unpersist()
+      // unpersist even on failure — leaked caches would pin executor
+      // memory for the session's lifetime across retries
       if (dealChildren != null) dealChildren.unpersist()
       if (eventsSlice != null) eventsSlice.unpersist()
       contactsDelta.unpersist()

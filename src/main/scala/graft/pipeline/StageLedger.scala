@@ -63,9 +63,11 @@ object StageLedger {
   }
 
   /** Record one completed stage (atomic temp+move full rewrite — the
-    * ledger is O(#endpoints), never data-sized). */
+    * ledger is O(#endpoints), never data-sized). Safe for concurrent
+    * callers: load → add → move runs under this object's lock, so two
+    * stages completing at once cannot drop each other's entry. */
   def markDone(outRoot: String, runId: String, stage: String,
-               counts: (Long, Long)): Map[String, (Long, Long)] = {
+               counts: (Long, Long)): Map[String, (Long, Long)] = synchronized {
     val done = load(outRoot, runId) + (stage -> counts)
     val p = JPaths.get(path(outRoot))
     if (p.getParent != null) Files.createDirectories(p.getParent)

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTesting
 import graft.sources.FixtureBackend
@@ -227,5 +228,80 @@ class RunPipelineSpec extends AnyFunSuite {
         nowUtc = "2026-03-02T00:00:00Z", acApiBase = Some(apiBase))
       assert(r3.persisted("contact_notes") == ((20L, 20L)))
     } finally server.stop(0)
+  }
+
+  private val starStages = Set("contacts", "activities", "orders", "orders_enriched",
+    "deal_notes", "deal_tasks", "deal_activities",
+    "activity_click", "activity_view", "activity_signup",
+    "activity_purchase", "activity_error",
+    "contact_tags", "contact_scores", "dim_nation", "dim_region")
+
+  private def liveStageThreads(): Set[String] =
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith(RunPipeline.StageThreadPrefix))
+      .map(_.getName).toSet
+
+  test("concurrent stages: a failing stage is rethrown as is, after the running " +
+      "ones finish, and a resume under the same runId completes the run") {
+    val root = Files.createTempDirectory("pipeline_kill").toString
+    FixtureBackend.reset()
+    val sf = SparkTesting.sf
+    val seeds = Seq("row#3@x.test", "row#7@x.test")
+    val now = "2026-04-01T00:00:00Z"
+
+    val boom = intercept[RuntimeException] {
+      RunPipeline.runFull(spark, root, sf, totalRows = 300, seedEmails = seeds,
+        nowUtc = now, stageHook = t =>
+          if (t == "orders") throw new RuntimeException(s"kill:$t"))
+    }
+    assert(boom.getClass == classOf[RuntimeException] && boom.getMessage == "kill:orders",
+      s"the hook's own throwable, not a wrapper: $boom")
+    assert(Watermark.load(s"$root/state.json").maxId == -1L)
+    assert(liveStageThreads().isEmpty, s"pool threads outlived runFull: ${liveStageThreads()}")
+
+    // the failing stage persisted before its hook threw, so it is
+    // ledgered; every ledgered stage finished its write
+    val runId = graft.Json.read(Files.readString(
+      java.nio.file.Paths.get(StageLedger.path(root)))).path("run_id").asText()
+    val ledgered = StageLedger.load(root, runId)
+    assert(ledgered.contains("orders"))
+    ledgered.keys.foreach { t =>
+      assert(new java.io.File(PersistTableDual.Paths(root, t).delta(runId)).isDirectory,
+        s"ledgered stage $t has no delta dir")
+    }
+
+    val resumed = RunPipeline.runFull(spark, root, sf, totalRows = 300,
+      seedEmails = seeds, nowUtc = now)
+    assert(resumed.runId == runId && resumed.watermarkAfter == 299)
+
+    val fresh = Files.createTempDirectory("pipeline_unkilled").toString
+    FixtureBackend.reset()
+    val whole = RunPipeline.runFull(spark, fresh, sf, totalRows = 300,
+      seedEmails = seeds, nowUtc = now)
+    assert(resumed.persisted == whole.persisted,
+      "a resumed run must report what an uninterrupted run reports")
+    assert((resumed.martRows, resumed.digests) == ((whole.martRows, whole.digests)))
+  }
+
+  test("concurrent stages: the hook is never entered concurrently and fires once " +
+      "per star-schema stage, on the stage pool") {
+    val root = Files.createTempDirectory("pipeline_hook").toString
+    FixtureBackend.reset()
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger()
+    val maxInFlight = new java.util.concurrent.atomic.AtomicInteger()
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    RunPipeline.runFull(spark, root, SparkTesting.sf, totalRows = 300,
+      nowUtc = "2026-05-01T00:00:00Z", stageHook = t => {
+        maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+        calls.add(t -> Thread.currentThread.getName)
+        Thread.sleep(50) // widen the window an unserialized hook would overlap in
+        inFlight.decrementAndGet()
+      })
+    val seen = calls.asScala.toSeq
+    assert(maxInFlight.get == 1, s"hook entered ${maxInFlight.get} times at once")
+    assert(seen.map(_._1).sorted == starStages.toSeq.sorted,
+      s"one call per star stage: ${seen.map(_._1)}")
+    assert(seen.forall(_._2.startsWith(RunPipeline.StageThreadPrefix)),
+      s"star stages run on the stage pool: ${seen.map(_._2).distinct}")
   }
 }
